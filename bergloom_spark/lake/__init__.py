@@ -11,6 +11,14 @@ Layout of a table directory::
     <root>/metadata/v<N>.metadata.json   # table metadata versions (CAS chain)
     <root>/data/...parquet               # data files
     <root>/deletes/...parquet            # position/equality delete files
+    <root>/deletes/dv-*.puffin           # deletion vectors
+
+Each ``v<N>.metadata.json`` is compact JSON: the table fields, an
+``"entries"`` pool with every distinct manifest entry of that version
+written once, and ``"snapshots"`` that name their files through
+``"entry_indices"`` into the pool (snapshots share entries, as Iceberg
+snapshots share manifests). A snapshot that inlines its own
+``"entries"`` objects is the legacy layout and still loads.
 
 Maps to the reference's catalog + manifest machinery
 (``core/src/compaction/mod.rs:363-444``).

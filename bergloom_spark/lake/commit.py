@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import random
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from bergloom_spark.config import CompactionConfig
 from bergloom_spark.lake import metadata as md
@@ -146,32 +146,7 @@ class RewriteFilesCommitManager:
             else base.last_sequence_number + 1
         )
         adds = [
-            md.ManifestEntry(
-                content=e.content,
-                file_path=e.file_path,
-                record_count=e.record_count,
-                file_size_bytes=e.file_size_bytes,
-                sequence_number=seq,
-                equality_ids=list(e.equality_ids),
-                partition=dict(e.partition),
-                column_stats=dict(e.column_stats),
-                column_blooms=dict(getattr(e, "column_blooms", {}) or {}),
-                column_value_counts=dict(
-                    getattr(e, "column_value_counts", {}) or {}
-                ),
-                column_null_counts=dict(
-                    getattr(e, "column_null_counts", {}) or {}
-                ),
-                column_buckets=dict(
-                    getattr(e, "column_buckets", {}) or {}
-                ),
-                # deletion-vector fields (r14): dropping them here
-                # would silently turn a DV entry into a "parquet
-                # pos-delete" pointing at a Puffin file
-                dv_referenced_file=getattr(e, "dv_referenced_file", None),
-                dv_offset=getattr(e, "dv_offset", None),
-                dv_size=getattr(e, "dv_size", None),
-            )
+            replace(e, sequence_number=seq)
             for e in add_entries
         ]
         snap = md.Snapshot(

@@ -604,9 +604,13 @@ def rewrite_deletes_to_vectors(
 def remove_orphan_files(
     table: LakeTable, older_than_s: float = 3 * 24 * 3600
 ) -> int:
-    """Delete parquet files under the table root referenced by NO
-    snapshot (debris from crashed writes and failed commits) — the
-    analog of Iceberg's ``remove_orphan_files`` maintenance procedure.
+    """Delete files under the table root referenced by NO snapshot
+    (debris from crashed writes and failed commits) — the analog of
+    Iceberg's ``remove_orphan_files`` maintenance procedure. Covered:
+    data and delete parquet, deletion-vector Puffin files, and the
+    ``metadata/.tmp-*.json`` scratch files a writer leaves when it dies
+    between writing and publishing a version. Published
+    ``v<N>.metadata.json`` files are never touched.
 
     ``older_than_s`` protects in-flight writers: a concurrent append
     writes its files BEFORE committing the snapshot that references
@@ -628,9 +632,14 @@ def remove_orphan_files(
     from bergloom_spark.lake.fileio import strip_local_scheme
 
     local_root = strip_local_scheme(meta.table_root)
-    for sub in ("data", "deletes"):
-        pattern = os.path.join(local_root, sub, "**", "*.parquet")
-        for path in glob.glob(pattern, recursive=True):
+    patterns = (
+        ("data", "**", "*.parquet"),
+        ("deletes", "**", "*.parquet"),
+        ("deletes", "**", "dv-*.puffin"),
+        ("metadata", ".tmp-*.json"),
+    )
+    for parts in patterns:
+        for path in glob.glob(os.path.join(local_root, *parts), recursive=True):
             apath = os.path.abspath(path)
             if apath in referenced:
                 continue

@@ -11,13 +11,24 @@ Semantics mirror Iceberg v2 as exercised by the reference:
   ``v<N>.metadata.json`` via ``os.link`` (fails on EEXIST — a
   compare-and-swap), losers reload and retry
   (``compaction/mod.rs:465-614``).
+
+On-disk layout of ``v<N>.metadata.json`` (compact JSON): the table
+fields, a table-level ``"entries"`` pool holding each distinct
+:class:`ManifestEntry` of the version once, and ``"snapshots"`` whose
+``"entry_indices"`` list positions in that pool — the analog of
+Iceberg snapshots sharing manifests, so a commit's metadata grows with
+the files it changes rather than with snapshots × live files. Loading
+rebuilds snapshots that share entry objects (as ``_carry_forward``
+does in memory). A snapshot that carries its own ``"entries"`` list of
+entry objects instead is the legacy inline layout; it still loads, so
+versions written before the pool existed stay readable.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 
 DATA = "data"
 POS_DELETE = "pos_delete"
@@ -115,22 +126,41 @@ class TableMetadata:
         raise KeyError(f"snapshot {snapshot_id} not found")
 
     def to_json(self) -> str:
-        return json.dumps(asdict(self), indent=1)
+        pool: list[dict] = []
+        by_value: dict[str, int] = {}  # entry JSON -> pool index
+        # Snapshots share entry objects, so most lookups stop here.
+        by_object: dict[int, int] = {}  # id(entry) -> pool index
+        snapshots = []
+        for snap in self.snapshots:
+            indices = []
+            for e in snap.entries:
+                i = by_object.get(id(e))
+                if i is None:
+                    d = asdict(e)
+                    key = json.dumps(d, sort_keys=True)
+                    i = by_object[id(e)] = by_value.setdefault(key, len(pool))
+                    if i == len(pool):
+                        pool.append(d)
+                indices.append(i)
+            s = {f.name: getattr(snap, f.name) for f in fields(snap)
+                 if f.name != "entries"}
+            s["entry_indices"] = indices
+            snapshots.append(s)
+        doc = {f.name: getattr(self, f.name) for f in fields(self)}
+        doc.update(snapshots=snapshots, entries=pool)
+        return json.dumps(doc, separators=(",", ":"))
 
     @staticmethod
     def from_json(text: str) -> "TableMetadata":
         raw = json.loads(text)
-        snapshots = [
-            Snapshot(
-                snapshot_id=s["snapshot_id"],
-                sequence_number=s["sequence_number"],
-                timestamp_ms=s["timestamp_ms"],
-                operation=s["operation"],
-                entries=[ManifestEntry(**e) for e in s["entries"]],
-                parent_snapshot_id=s.get("parent_snapshot_id"),
-            )
-            for s in raw.pop("snapshots")
-        ]
+        pool = [ManifestEntry(**e) for e in raw.pop("entries", [])]
+        snapshots = []
+        for s in raw.pop("snapshots"):
+            if "entries" in s:  # legacy inline layout
+                entries = [ManifestEntry(**e) for e in s.pop("entries")]
+            else:
+                entries = [pool[i] for i in s.pop("entry_indices")]
+            snapshots.append(Snapshot(entries=entries, **s))
         return TableMetadata(snapshots=snapshots, **raw)
 
 

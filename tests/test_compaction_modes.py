@@ -230,6 +230,46 @@ def test_remove_orphan_files(spark, tmp_path):
     assert t.read().count() == 100
 
 
+def test_remove_orphan_files_reclaims_dv_and_tmp_debris(spark, tmp_path):
+    """A deletion-vector Puffin file no snapshot references and a stale
+    ``metadata/.tmp-*.json`` (a writer died between write and publish)
+    are reclaimed; the referenced DV and every published version stay."""
+    import os
+    import time
+
+    from bergloom_spark.lake.compaction import remove_orphan_files
+
+    t = _table(spark, tmp_path)
+    t.append(_df(spark, 100, "a"))
+    t.delete_matching(spark.range(10), ["id"], as_vectors=True)
+    root = t.meta.table_root
+    live_dvs = [
+        e.file_path
+        for e in t.meta.current_snapshot().files(md.POS_DELETE)
+        if e.dv_referenced_file
+    ]
+    assert live_dvs and all(p.endswith(".puffin") for p in live_dvs)
+    orphan_dv = os.path.join(root, "deletes", "dv-0123456789abcdef.puffin")
+    stale_tmp = os.path.join(root, "metadata", ".tmp-1-1.json")
+    with open(orphan_dv, "wb") as fh:
+        fh.write(b"PFA1junkPFA1")
+    with open(stale_tmp, "w") as fh:
+        fh.write("{")
+
+    def tree():
+        return {
+            os.path.join(d, f) for d, _, files in os.walk(root) for f in files
+        }
+
+    old = time.time() - 10 * 24 * 3600
+    before = tree()
+    for p in before:  # everything, referenced files too, is past the horizon
+        os.utime(p, (old, old))
+    assert remove_orphan_files(t) == 2
+    assert before - tree() == {orphan_dv, stale_tmp}
+    assert t.read().count() == 90
+
+
 def test_binpack_partition_scoped(spark, tmp_path):
     """Round 5 (rewrite_data_files ... where): a partition_filter
     folds only the matching partition's small files; other partitions'

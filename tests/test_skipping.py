@@ -163,11 +163,12 @@ def test_old_metadata_without_stats_loads():
             )
         ],
     )
-    text = meta.to_json()
-    # simulate a pre-stats metadata file on disk
+    # simulate a pre-stats metadata file on disk: asdict() is the
+    # legacy inline layout, each snapshot carrying its own entries
     import json
+    from dataclasses import asdict
 
-    raw = json.loads(text)
+    raw = asdict(meta)
     raw["snapshots"][0]["entries"][0].pop("column_stats")
     loaded = md.TableMetadata.from_json(json.dumps(raw))
     assert loaded.snapshots[0].entries[0].column_stats == {}

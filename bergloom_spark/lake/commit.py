@@ -1,6 +1,32 @@
-"""RewriteFiles commit manager with optimistic retry.
+"""The one metadata commit path: a CAS-retry loop over a ``build``.
 
-Reference: ``RewriteDataFilesCommitManager``
+Every lake commit (append and DML, write-audit-publish, refs,
+rollback, schema and partition evolution, snapshot expiry, statistics
+properties, rewrites) goes through :func:`commit`. The caller hands it
+a first base (a :class:`~bergloom_spark.lake.metadata.TableMetadata`)
+and ``build(base)``, which derives the next version from that base —
+re-checking the operation's own guards against it — usually with
+``base.next_version(...)`` or ``base.with_snapshot(...)``. The loop
+publishes the result with ``md.write_version``; when another writer
+took that version first (:class:`~bergloom_spark.lake.metadata.
+CommitConflict`) it sleeps, re-reads the newest version with
+``md.read_current`` and calls ``build`` again on it. Written data files
+are never rewritten on retry: only the metadata is rebuilt.
+
+``build`` signals a REAL conflict — one a retry cannot fix — by raising
+:class:`CommitFailed` (schema changed, input files gone, staged parent
+moved), ``ValueError`` (a ref name now taken) or ``KeyError`` (a
+snapshot or ref now gone). Those propagate at once and are never
+retried. After ``max_retries`` lost races the last ``CommitConflict``
+propagates.
+
+Two retry policies, one backoff formula (:meth:`RetryConfig.delay`,
+the reference's ``compaction/mod.rs:595-611``): compaction-type
+rewrites use :meth:`RetryConfig.from_compaction` (``CompactionConfig``,
+1 s → 10 s by default); every other commit uses :data:`TABLE_RETRY`,
+short enough for interactive DML.
+
+Reference for the rewrite path: ``RewriteDataFilesCommitManager``
 (``core/src/compaction/mod.rs:465-614``): reload the table, guard on
 schema id, build a RewriteFiles transaction (remove old files, add new
 ones pinned to the *starting* snapshot's sequence number so
@@ -37,6 +63,36 @@ class RetryConfig:
             initial_delay_s=config.retry_initial_delay_s,
             max_delay_s=config.retry_max_delay_s,
         )
+
+    def delay(self, attempt: int) -> float:
+        """Jittered capped exponential backoff before retry ``attempt``
+        (0-based): within [0.5, 1] × min(initial · 2^attempt, cap)."""
+        return min(
+            self.initial_delay_s * (2**attempt), self.max_delay_s
+        ) * (0.5 + random.random() / 2)
+
+
+# Every commit that is not a compaction-type rewrite: worst-case total
+# sleep 0.025 + 0.05 + 0.1 + 0.2 + 0.25 = 0.625 s.
+TABLE_RETRY = RetryConfig(max_retries=5, initial_delay_s=0.025, max_delay_s=0.25)
+
+
+def commit(base: md.TableMetadata, build, retry: RetryConfig, sleep=time.sleep):
+    """Publish ``build(base)``; on a lost CAS race re-read the newest
+    version and rebuild on it, up to ``retry.max_retries`` times.
+    Returns the committed metadata."""
+    attempt = 0
+    while True:
+        meta = build(base)
+        try:
+            md.write_version(meta)
+            return meta
+        except md.CommitConflict:
+            if attempt >= retry.max_retries:
+                raise
+            sleep(retry.delay(attempt))
+            attempt += 1
+            base = md.read_current(base.table_root)
 
 
 class RewriteFilesCommitManager:
@@ -77,35 +133,30 @@ class RewriteFilesCommitManager:
         since the overwrite was planned), the commit FAILS instead of
         silently keeping rows the caller believes replaced — the
         caller must re-plan against the new state."""
-        attempt = 0
-        while True:
-            try:
-                return self._try_commit(
-                    add_entries,
-                    remove_paths,
-                    operation,
-                    overwritten_partitions,
-                    set_properties,
-                )
-            except md.CommitConflict:
-                if attempt >= self.retry.max_retries:
-                    raise
-                delay = min(
-                    self.retry.initial_delay_s * (2**attempt),
-                    self.retry.max_delay_s,
-                ) * (0.5 + random.random() / 2)
-                self._sleep(delay)
-                attempt += 1
+
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            return self._try_commit(
+                base,
+                add_entries,
+                remove_paths,
+                operation,
+                overwritten_partitions,
+                set_properties,
+            )
+
+        return commit(
+            md.read_current(self.table_root), build, self.retry, self._sleep
+        )
 
     def _try_commit(
         self,
+        base: md.TableMetadata,
         add_entries: list[md.ManifestEntry],
         remove_paths: set[str],
-        operation: str = "rewrite",
-        overwritten_partitions: set[tuple] | None = None,
-        set_properties: dict[str, str] | None = None,
+        operation: str,
+        overwritten_partitions: set[tuple] | None,
+        set_properties: dict[str, str] | None,
     ) -> md.TableMetadata:
-        base = md.read_current(self.table_root)
         # Schema-id guard: abort if the table schema changed mid-compaction
         # (compaction/mod.rs:532-541).
         if base.schema_id != self.starting_schema_id:
@@ -145,33 +196,13 @@ class RewriteFilesCommitManager:
             if self.use_starting_sequence_number
             else base.last_sequence_number + 1
         )
-        adds = [
-            replace(e, sequence_number=seq)
-            for e in add_entries
-        ]
-        snap = md.Snapshot(
-            snapshot_id=base.last_snapshot_id + 1,
-            sequence_number=base.last_sequence_number + 1,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            entries=[e for e in live if e.file_path not in remove_paths] + adds,
-            parent_snapshot_id=base.current_snapshot_id,
+        meta = base.with_snapshot(
+            operation,
+            [replace(e, sequence_number=seq) for e in add_entries],
+            removed=remove_paths,
         )
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            # set_properties rides the SAME CAS as the file rewrite
-            # (a sorted compaction's sort-order claim must land with
-            # the sorted files or not at all, r14)
-            properties={**base.properties, **(set_properties or {})},
-            refs=dict(base.refs),
-            current_snapshot_id=snap.snapshot_id,
-            last_sequence_number=snap.sequence_number,
-            last_snapshot_id=snap.snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots) + [snap],
-        )
-        md.write_version(meta)
+        # set_properties rides the SAME CAS as the file rewrite (a sorted
+        # compaction's sort-order claim must land with the sorted files
+        # or not at all, r14)
+        meta.properties.update(set_properties or {})
         return meta

@@ -45,6 +45,30 @@ class CompactionResult:
     validated: bool = False
 
 
+def _commit_rewrite(
+    table: LakeTable,
+    snap: md.Snapshot,
+    config: CompactionConfig,
+    add_entries: list[md.ManifestEntry],
+    remove_paths: set[str],
+    set_properties: dict[str, str] | None = None,
+) -> None:
+    """Commit a rewrite planned on ``snap`` (output pinned to its
+    sequence number unless the config says otherwise) with the
+    compaction retry policy, and point ``table`` at the committed
+    version."""
+    manager = RewriteFilesCommitManager(
+        table_root=table.meta.table_root,
+        starting_schema_id=table.meta.schema_id,
+        starting_sequence_number=snap.sequence_number,
+        use_starting_sequence_number=config.use_starting_sequence_number,
+        retry=RetryConfig.from_compaction(config),
+    )
+    table.meta = manager.rewrite_files(
+        add_entries, remove_paths, set_properties=set_properties
+    )
+
+
 class Compaction:
     """Compaction entry point (builder-style, compaction/mod.rs:124-163)."""
 
@@ -118,26 +142,18 @@ class Compaction:
             bloom_cols=table.bloom_cols(),
         )
 
-        manager = RewriteFilesCommitManager(
-            table_root=table.meta.table_root,
-            starting_schema_id=table.meta.schema_id,
-            starting_sequence_number=snap.sequence_number,
-            use_starting_sequence_number=self.config.use_starting_sequence_number,
-            retry=RetryConfig.from_compaction(self.config),
-        )
         metrics = self.registry.for_table(
             self.catalog_name, self.table.meta.table_root
         )
         commit_start = time.monotonic()
         try:
-            manager.rewrite_files(add_entries, remove_paths)
+            _commit_rewrite(table, snap, self.config, add_entries, remove_paths)
         except Exception:
             metrics.compaction_commit_failed_counter += 1
             raise
         metrics.compaction_commit_counter += 1
         metrics.compaction_commit_duration.observe(time.monotonic() - commit_start)
 
-        table.refresh()
         result = CompactionResult(
             stat=RewriteFilesStat(
                 rewritten_files_count=len(old_entries),
@@ -286,15 +302,7 @@ class BinpackCompaction(Compaction):
                 parquet_bytes_hint=sum(e.file_size_bytes for e in selected),
                 bloom_cols=table.bloom_cols(),
             )
-        manager = RewriteFilesCommitManager(
-            table_root=table.meta.table_root,
-            starting_schema_id=table.meta.schema_id,
-            starting_sequence_number=snap.sequence_number,
-            use_starting_sequence_number=self.config.use_starting_sequence_number,
-            retry=RetryConfig.from_compaction(self.config),
-        )
-        manager.rewrite_files(add_entries, remove_paths)
-        table.refresh()
+        _commit_rewrite(table, snap, self.config, add_entries, remove_paths)
         return CompactionResult(
             stat=RewriteFilesStat(
                 rewritten_files_count=len(selected),
@@ -418,13 +426,6 @@ class SortCompaction(Compaction):
             partition_spec=part_cols or None,
             bloom_cols=table.bloom_cols(),
         )
-        manager = RewriteFilesCommitManager(
-            table_root=table.meta.table_root,
-            starting_schema_id=table.meta.schema_id,
-            starting_sequence_number=snap.sequence_number,
-            use_starting_sequence_number=self.config.use_starting_sequence_number,
-            retry=RetryConfig.from_compaction(self.config),
-        )
         # The sorted layout is a TABLE property once the full rewrite
         # lands (every live data file is an output of this sort):
         # record it in the same CAS commit so native engines (via
@@ -432,8 +433,8 @@ class SortCompaction(Compaction):
         # clustering (verdict r13 Missing #4).
         import json as _json
 
-        manager.rewrite_files(
-            add_entries, remove_paths,
+        _commit_rewrite(
+            table, snap, self.config, add_entries, remove_paths,
             set_properties={
                 "sort_order": _json.dumps({
                     "kind": "zorder" if self.zorder else "linear",
@@ -441,7 +442,6 @@ class SortCompaction(Compaction):
                 })
             },
         )
-        table.refresh()
         return CompactionResult(
             stat=RewriteFilesStat(
                 rewritten_files_count=len(old_entries),
@@ -513,15 +513,7 @@ def rewrite_position_deletes(
         )
         remove_paths |= {e.file_path for e in pos_entries}
 
-    manager = RewriteFilesCommitManager(
-        table_root=table.meta.table_root,
-        starting_schema_id=table.meta.schema_id,
-        starting_sequence_number=snap.sequence_number,
-        use_starting_sequence_number=config.use_starting_sequence_number,
-        retry=RetryConfig.from_compaction(config),
-    )
-    manager.rewrite_files(add_entries, remove_paths)
-    table.refresh()
+    _commit_rewrite(table, snap, config, add_entries, remove_paths)
     return CompactionResult(
         stat=RewriteFilesStat(
             rewritten_files_count=len(pos_entries) + len(dangling_eq),
@@ -582,15 +574,7 @@ def rewrite_deletes_to_vectors(
         kept, table.meta.table_root, snap.sequence_number
     )
     remove_paths = {e.file_path for e in pos_entries}
-    manager = RewriteFilesCommitManager(
-        table_root=table.meta.table_root,
-        starting_schema_id=table.meta.schema_id,
-        starting_sequence_number=snap.sequence_number,
-        use_starting_sequence_number=config.use_starting_sequence_number,
-        retry=RetryConfig.from_compaction(config),
-    )
-    manager.rewrite_files(add_entries, remove_paths)
-    table.refresh()
+    _commit_rewrite(table, snap, config, add_entries, remove_paths)
     return CompactionResult(
         stat=RewriteFilesStat(
             rewritten_files_count=len(pos_entries),
@@ -659,57 +643,49 @@ def expire_snapshots(table: LakeTable, keep_last: int = 1) -> int:
     Data files referenced only by expired snapshots are deleted from
     disk. Returns the number of expired snapshots.
     """
-    import os
 
-    meta = table.refresh().meta
-    if len(meta.snapshots) <= keep_last:
+    def split(base: md.TableMetadata) -> tuple[list, list]:
+        kept_ids = {s.snapshot_id for s in base.snapshots[-keep_last:]}
+        # The current snapshot must survive regardless of its position —
+        # after rollback_to it may not be among the newest keep_last.
+        if base.current_snapshot_id is not None:
+            kept_ids.add(base.current_snapshot_id)
+        # Named refs retain their snapshots (Iceberg semantics): a tagged
+        # release stays readable until the tag is dropped, no matter how
+        # aggressive the expiry policy.
+        kept_ids.update(r["snapshot_id"] for r in base.refs.values())
+        return (
+            [s for s in base.snapshots if s.snapshot_id in kept_ids],
+            [s for s in base.snapshots if s.snapshot_id not in kept_ids],
+        )
+
+    if not split(table.refresh().meta)[1]:
         return 0
-    kept_ids = {s.snapshot_id for s in meta.snapshots[-keep_last:]}
-    # The current snapshot must survive regardless of its position —
-    # after rollback_to it may not be among the newest keep_last.
-    if meta.current_snapshot_id is not None:
-        kept_ids.add(meta.current_snapshot_id)
-    # Named refs retain their snapshots (Iceberg semantics): a tagged
-    # release stays readable until the tag is dropped, no matter how
-    # aggressive the expiry policy.
-    kept_ids.update(r["snapshot_id"] for r in meta.refs.values())
-    kept = [s for s in meta.snapshots if s.snapshot_id in kept_ids]
-    expired = [s for s in meta.snapshots if s.snapshot_id not in kept_ids]
-    if not expired:
-        return 0
-    live_paths = {e.file_path for s in kept for e in s.entries}
     # Only delete files THIS table owns (under its root). A shallow
     # clone (LakeTable.clone_to) carries the SOURCE's absolute paths in
     # its manifests; after a rewrite on the clone those borrowed files
     # become "dead" in the clone's metadata, but physically deleting
     # them would corrupt the source table, which still references them.
     # Borrowed entries are dropped from the clone's metadata only.
-    from bergloom_spark.lake.fileio import strip_local_scheme
+    root = os.path.abspath(strip_local_scheme(table.meta.table_root)) + os.sep
+    # Set by each build; only the one that committed counts.
+    outcome: dict = {}
 
-    root = os.path.abspath(strip_local_scheme(meta.table_root)) + os.sep
-    dead_paths = {
-        p
-        for p in (
-            {e.file_path for s in expired for e in s.entries} - live_paths
-        )
-        if os.path.abspath(p).startswith(root)
-    }
-    new_meta = md.TableMetadata(
-        table_root=meta.table_root,
-        schema=meta.schema,
-        schema_id=meta.schema_id,
-        partition_spec=list(meta.partition_spec),
-        properties=dict(meta.properties),
-        refs=dict(meta.refs),
-        current_snapshot_id=meta.current_snapshot_id,
-        last_sequence_number=meta.last_sequence_number,
-        last_snapshot_id=meta.last_snapshot_id,
-        version=meta.version + 1,
-        snapshots=kept,
-    )
-    md.write_version(new_meta)
-    table.meta = new_meta
-    for path in dead_paths:
+    def build(base: md.TableMetadata) -> md.TableMetadata:
+        kept, expired = split(base)
+        live_paths = {e.file_path for s in kept for e in s.entries}
+        outcome["expired"] = len(expired)
+        outcome["dead"] = {
+            p
+            for p in (
+                {e.file_path for s in expired for e in s.entries} - live_paths
+            )
+            if os.path.abspath(p).startswith(root)
+        }
+        return base.next_version(snapshots=kept)
+
+    table._commit(build)
+    for path in outcome["dead"]:
         if os.path.exists(path):
             os.unlink(path)
-    return len(expired)
+    return outcome["expired"]

@@ -18,17 +18,23 @@ fields, a table-level ``"entries"`` pool holding each distinct
 ``"entry_indices"`` list positions in that pool — the analog of
 Iceberg snapshots sharing manifests, so a commit's metadata grows with
 the files it changes rather than with snapshots × live files. Loading
-rebuilds snapshots that share entry objects (as ``_carry_forward``
-does in memory). A snapshot that carries its own ``"entries"`` list of
-entry objects instead is the legacy inline layout; it still loads, so
-versions written before the pool existed stay readable.
+rebuilds snapshots that share entry objects (as
+:meth:`TableMetadata.with_snapshot` does in memory). A snapshot that
+carries its own ``"entries"`` list of entry objects instead is the
+legacy inline layout; it still loads, so versions written before the
+pool existed stay readable.
+
+Every new version is derived here (:meth:`TableMetadata.next_version`,
+:meth:`TableMetadata.with_snapshot`) and published by the one
+CAS-retry loop in ``lake/commit.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import asdict, dataclass, field, fields
+import time
+from dataclasses import asdict, dataclass, field, fields, replace
 
 DATA = "data"
 POS_DELETE = "pos_delete"
@@ -124,6 +130,52 @@ class TableMetadata:
             if snap.snapshot_id == snapshot_id:
                 return snap
         raise KeyError(f"snapshot {snapshot_id} not found")
+
+    def next_version(self, **changes) -> "TableMetadata":
+        """A copy at ``version + 1`` with ``changes`` applied. The
+        containers are shallow copies, so editing the copy's lists and
+        dicts never touches ``self``; snapshots and entries are shared."""
+        copied = dict(
+            partition_spec=list(self.partition_spec),
+            properties=dict(self.properties),
+            refs=dict(self.refs),
+            snapshots=list(self.snapshots),
+            version=self.version + 1,
+        )
+        copied.update(changes)
+        return replace(self, **copied)
+
+    def with_snapshot(
+        self,
+        operation: str,
+        entries: list[ManifestEntry],
+        staged: bool = False,
+        removed: set[str] = frozenset(),
+    ) -> "TableMetadata":
+        """The next version with one new snapshot: the current
+        snapshot's live files (the same entry objects) minus the paths
+        in ``removed``, plus ``entries``. A ``staged`` snapshot
+        (write-audit-publish) is recorded while the table keeps
+        pointing at its parent until ``publish``."""
+        current = self.current_snapshot()
+        live = current.entries if current is not None else []
+        snap = Snapshot(
+            snapshot_id=self.last_snapshot_id + 1,
+            sequence_number=self.last_sequence_number + 1,
+            timestamp_ms=int(time.time() * 1000),
+            operation=operation,
+            entries=[e for e in live if e.file_path not in removed]
+            + list(entries),
+            parent_snapshot_id=self.current_snapshot_id,
+        )
+        return self.next_version(
+            current_snapshot_id=(
+                self.current_snapshot_id if staged else snap.snapshot_id
+            ),
+            last_sequence_number=snap.sequence_number,
+            last_snapshot_id=snap.snapshot_id,
+            snapshots=self.snapshots + [snap],
+        )
 
     def to_json(self) -> str:
         pool: list[dict] = []

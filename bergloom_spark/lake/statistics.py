@@ -202,8 +202,7 @@ def compute_table_statistics(
     path = os.path.join(
         out_dir, f"stats-{snap.snapshot_id}.puffin"
     )
-    with open(path, "wb") as f:
-        f.write(data)
+    io_for(path).write_bytes(path, data)
     _commit_properties(
         table,
         {
@@ -211,7 +210,6 @@ def compute_table_statistics(
             "statistics_snapshot_id": str(snap.snapshot_id),
         },
     )
-    table.refresh()
     return path
 
 
@@ -220,29 +218,9 @@ def _commit_properties(table, props: dict[str, str]) -> None:
     properties changes never create snapshots — a stats pointer that
     bumped the snapshot would make itself stale). Same version-file
     CAS as every commit; lost races re-read and re-apply."""
-    from bergloom_spark.lake import metadata as md
-
-    for _ in range(5):
-        base = md.read_current(table.meta.table_root)
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties={**base.properties, **props},
-            refs=dict(base.refs),
-            current_snapshot_id=base.current_snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        try:
-            md.write_version(meta)
-            return
-        except md.CommitConflict:
-            continue
-    raise md.CommitConflict("statistics: property commit lost 5 races")
+    table._commit(
+        lambda base: base.next_version(properties={**base.properties, **props})
+    )
 
 
 def compute_partition_statistics(table) -> str:
@@ -318,7 +296,6 @@ def compute_partition_statistics(table) -> str:
             "partition_statistics_snapshot_id": str(snap.snapshot_id),
         },
     )
-    table.refresh()
     return path
 
 
@@ -326,8 +303,7 @@ def read_ndv_stats(puffin_path: str) -> dict[str, int]:
     """{column: ndv} from a statistics Puffin file — validates each
     blob's framing and RE-DERIVES the estimate from the sketch, so a
     property/payload mismatch is caught instead of trusted."""
-    with open(puffin_path, "rb") as f:
-        raw = f.read()
+    raw = io_for(puffin_path).read_bytes(puffin_path)
     meta = puffin.read_file_metadata(raw)
     out: dict[str, int] = {}
     for b in meta.get("blobs", []):

@@ -12,7 +12,6 @@ sequence number (equality) or by exact ``(file_path, pos)`` match
 from __future__ import annotations
 
 import re
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +20,12 @@ from pyspark.sql import types as T
 from bergloom_spark.lake import metadata as md
 from bergloom_spark.lake import skipping as sk
 from bergloom_spark.lake import writer as wr
+from bergloom_spark.lake.commit import (
+    TABLE_RETRY,
+    CommitFailed,
+    RewriteFilesCommitManager,
+    commit,
+)
 from bergloom_spark.operators import mor
 
 
@@ -170,52 +175,31 @@ class LakeTable:
         return T.StructType.fromJson(self.meta.schema)
 
     # ------------------------------------------------------------------
-    # commits (append paths used by tests/fixtures; rewrite lives in
-    # commit.py with the retry machinery)
+    # commits: each write operation is a ``build`` of the next metadata
+    # version from a base, published by the one CAS-retry loop in
+    # commit.py (which rebuilds on the newest base after a lost race)
     # ------------------------------------------------------------------
-    def _next_commit(
-        self, operation: str, staged: bool = False
-    ) -> tuple[md.TableMetadata, md.Snapshot]:
-        base = self.meta
-        snap = md.Snapshot(
-            snapshot_id=base.last_snapshot_id + 1,
-            sequence_number=base.last_sequence_number + 1,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            entries=[],
-            parent_snapshot_id=base.current_snapshot_id,
-        )
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            # Staged (write-audit-publish): the snapshot is recorded but
-            # the table keeps pointing at its parent until publish().
-            current_snapshot_id=(
-                base.current_snapshot_id if staged else snap.snapshot_id
-            ),
-            last_sequence_number=snap.sequence_number,
-            last_snapshot_id=snap.snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots) + [snap],
-        )
-        return meta, snap
+    def _commit(self, build) -> md.TableMetadata:
+        """Publish ``build(base)`` through ``commit.commit`` with
+        :data:`TABLE_RETRY`, starting from this handle's metadata (no
+        extra read when the handle is current). ``self.meta`` ends as
+        the committed version or, when the commit fails, as the newest
+        base the loop read."""
 
-    def _carry_forward(self, snap: md.Snapshot) -> None:
-        """New snapshot inherits the previous snapshot's live files."""
-        current = self.meta.current_snapshot()
-        if current is not None:
-            snap.entries.extend(current.entries)
+        def tracked(base: md.TableMetadata) -> md.TableMetadata:
+            self.meta = base
+            return build(base)
+
+        with self._commit_lock:
+            self.meta = commit(self.meta, tracked, TABLE_RETRY)
+        return self.meta
 
     def _commit_with_retry(
         self,
         operation: str,
         new_entries: list,
         properties_update: dict[str, str] | None = None,
-        max_retries: int = 5,
+        staged: bool = False,
     ) -> md.Snapshot:
         """Optimistic-retry commit of ALREADY-WRITTEN files (the
         reference's retry semantics, compaction/mod.rs:595-611,
@@ -237,62 +221,27 @@ class LakeTable:
             # maintenance run far from its cause.
             parse_sort_order(properties_update[SORT_ORDER_PROP], self.schema)
         has_pos = any(e.content == md.POS_DELETE for e in new_entries)
-        with self._commit_lock:
-            return self._commit_locked(
-                operation, new_entries, properties_update, max_retries,
-                has_pos,
-            )
 
-    def _commit_locked(
-        self,
-        operation: str,
-        new_entries: list,
-        properties_update: dict[str, str] | None,
-        max_retries: int,
-        has_pos: bool,
-    ) -> md.Snapshot:
-        import random as _random
+        def data_paths(meta: md.TableMetadata) -> set[str]:
+            snap = meta.current_snapshot()
+            return {e.file_path for e in snap.files(md.DATA)} if snap else set()
 
-        from bergloom_spark.lake.commit import CommitFailed
+        base_data = data_paths(self.meta)
 
-        cur = self.meta.current_snapshot()
-        base_data = {
-            e.file_path
-            for e in (cur.entries if cur is not None else [])
-            if e.content == md.DATA
-        }
-        attempt = 0
-        while True:
-            meta, snap = self._next_commit(operation)
-            if properties_update:
-                meta.properties.update(properties_update)
-            self._carry_forward(snap)
-            if attempt and has_pos:
-                live = {
-                    e.file_path
-                    for e in snap.entries
-                    if e.content == md.DATA
-                }
-                if not base_data <= live:
-                    raise CommitFailed(
-                        "concurrent rewrite removed data files this "
-                        "positional-delete commit references; re-run "
-                        "the delete against the current snapshot"
-                    )
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            if has_pos and not base_data <= data_paths(base):
+                raise CommitFailed(
+                    "concurrent rewrite removed data files this "
+                    "positional-delete commit references; re-run "
+                    "the delete against the current snapshot"
+                )
             for e in new_entries:
-                e.sequence_number = snap.sequence_number
-            snap.entries.extend(new_entries)
-            try:
-                md.write_version(meta)
-            except md.CommitConflict:
-                attempt += 1
-                if attempt > max_retries:
-                    raise
-                time.sleep(_random.uniform(0.0, 0.05 * attempt))
-                self.refresh()
-                continue
-            self.meta = meta
-            return snap
+                e.sequence_number = base.last_sequence_number + 1
+            meta = base.with_snapshot(operation, new_entries, staged=staged)
+            meta.properties.update(properties_update or {})
+            return meta
+
+        return self._commit(build).snapshots[-1]
 
     def append(
         self,
@@ -322,21 +271,15 @@ class LakeTable:
         ``read(snapshot_id=...)``, then :meth:`publish` it (or leave it
         for ``expire_snapshots`` to reap). Files are fully written and
         durable — publish is a metadata flip."""
-        meta, snap = self._next_commit("stage-append", staged=True)
-        self._carry_forward(snap)
-        snap.entries.extend(
-            wr.write_data_files(
-                df,
-                self.meta.table_root,
-                snap.sequence_number,
-                target_file_size,
-                partition_spec=self.meta.partition_spec or None,
-                bloom_cols=self.bloom_cols(),
-            )
+        entries = wr.write_data_files(
+            df,
+            self.meta.table_root,
+            self.meta.last_sequence_number + 1,
+            target_file_size,
+            partition_spec=self.meta.partition_spec or None,
+            bloom_cols=self.bloom_cols(),
         )
-        md.write_version(meta)
-        self.meta = meta
-        return snap
+        return self._commit_with_retry("stage-append", entries, staged=True)
 
     def publish(self, snapshot_id: int) -> None:
         """Write-audit-publish step 3: make a staged snapshot current.
@@ -346,31 +289,18 @@ class LakeTable:
         files, so publishing over a newer state would silently drop the
         intervening commits. Re-stage on top of the new current instead.
         """
-        from bergloom_spark.lake.commit import CommitFailed
 
-        base = self.meta
-        snap = base.snapshot_by_id(snapshot_id)
-        if snap.parent_snapshot_id != base.current_snapshot_id:
-            raise CommitFailed(
-                f"staged snapshot {snapshot_id} was built on "
-                f"{snap.parent_snapshot_id}, but current is "
-                f"{base.current_snapshot_id}; re-stage and retry"
-            )
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            current_snapshot_id=snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            snap = base.snapshot_by_id(snapshot_id)
+            if snap.parent_snapshot_id != base.current_snapshot_id:
+                raise CommitFailed(
+                    f"staged snapshot {snapshot_id} was built on "
+                    f"{snap.parent_snapshot_id}, but current is "
+                    f"{base.current_snapshot_id}; re-stage and retry"
+                )
+            return base.next_version(current_snapshot_id=snapshot_id)
+
+        self._commit(build)
 
     def append_position_deletes(self, df: DataFrame) -> md.Snapshot:
         """``df``: (file_path string, pos long) rows to delete."""
@@ -391,20 +321,8 @@ class LakeTable:
         return self._commit_with_retry("delete", entries)
 
     # ------------------------------------------------------------------
-    # snapshot management
-    # ------------------------------------------------------------------
-    # ------------------------------------------------------------------
     # named refs (Iceberg-style tags & branches)
     # ------------------------------------------------------------------
-    def _commit_refs(self, refs: dict) -> None:
-        import dataclasses
-
-        meta = dataclasses.replace(
-            self.meta, refs=refs, version=self.meta.version + 1
-        )
-        md.write_version(meta)
-        self.meta = meta
-
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """Immutable named pointer to a snapshot (defaults to current) —
         the dataset-release primitive: tag the exact snapshot a model
@@ -417,31 +335,38 @@ class LakeTable:
         self._create_ref(name, "branch", snapshot_id)
 
     def _create_ref(self, name: str, kind: str, snapshot_id: int | None) -> None:
-        if name in self.meta.refs:
-            raise ValueError(f"ref {name!r} already exists")
-        if snapshot_id is None:
-            snapshot_id = self.meta.current_snapshot_id
-        if snapshot_id is None:
-            raise ValueError("table has no snapshot to reference")
-        self.meta.snapshot_by_id(snapshot_id)  # KeyError if unknown
-        refs = dict(self.meta.refs)
-        refs[name] = {"snapshot_id": int(snapshot_id), "type": kind}
-        self._commit_refs(refs)
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            if name in base.refs:
+                raise ValueError(f"ref {name!r} already exists")
+            sid = base.current_snapshot_id if snapshot_id is None else snapshot_id
+            if sid is None:
+                raise ValueError("table has no snapshot to reference")
+            base.snapshot_by_id(sid)  # KeyError if unknown
+            ref = {"snapshot_id": int(sid), "type": kind}
+            return base.next_version(refs={**base.refs, name: ref})
+
+        self._commit(build)
 
     def set_branch(self, name: str, snapshot_id: int) -> None:
-        ref = self.meta.refs.get(name)
-        if ref is None or ref["type"] != "branch":
-            raise ValueError(f"{name!r} is not a branch")
-        self.meta.snapshot_by_id(snapshot_id)
-        refs = dict(self.meta.refs)
-        refs[name] = {"snapshot_id": int(snapshot_id), "type": "branch"}
-        self._commit_refs(refs)
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            ref = base.refs.get(name)
+            if ref is None or ref["type"] != "branch":
+                raise ValueError(f"{name!r} is not a branch")
+            base.snapshot_by_id(snapshot_id)
+            ref = {"snapshot_id": int(snapshot_id), "type": "branch"}
+            return base.next_version(refs={**base.refs, name: ref})
+
+        self._commit(build)
 
     def drop_ref(self, name: str) -> None:
-        if name not in self.meta.refs:
-            raise KeyError(f"ref {name!r} not found")
-        refs = {k: v for k, v in self.meta.refs.items() if k != name}
-        self._commit_refs(refs)
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            if name not in base.refs:
+                raise KeyError(f"ref {name!r} not found")
+            return base.next_version(
+                refs={k: v for k, v in base.refs.items() if k != name}
+            )
+
+        self._commit(build)
 
     def ref_snapshot_id(self, name: str) -> int:
         ref = self.meta.refs.get(name)
@@ -456,23 +381,12 @@ class LakeTable:
         ``expire_snapshots`` drops them, and sequence numbers keep
         increasing from where they were (a later re-append can never
         collide with the rolled-back commits)."""
-        base = self.meta
-        base.snapshot_by_id(snapshot_id)  # KeyError if unknown
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id,
-            partition_spec=list(base.partition_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            current_snapshot_id=snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            base.snapshot_by_id(snapshot_id)  # KeyError if unknown
+            return base.next_version(current_snapshot_id=snapshot_id)
+
+        self._commit(build)
 
     def clone_to(self, new_root: str) -> "LakeTable":
         """Zero-copy (shallow) clone at the current snapshot — the
@@ -737,35 +651,59 @@ class LakeTable:
     # ------------------------------------------------------------------
     def _evolve_schema(
         self,
-        new_schema: T.StructType,
-        dropped: list[str],
+        new_schema: T.StructType | None = None,
+        dropped: list[str] = (),
         extra_props: dict[str, str] | None = None,
+        partition_spec: list[str] | None = None,
+        pinned: list[str] = (),
     ) -> None:
-        """Metadata-only commit: same snapshots, new schema, schema_id+1.
-        Any compaction that started under the old schema_id aborts at
-        commit time via the schema guard."""
-        base = self.meta
-        props = dict(base.properties)
-        if dropped:
-            prev = [c for c in props.get("dropped_columns", "").split(",") if c]
-            props["dropped_columns"] = ",".join(prev + dropped)
-        if extra_props:
-            props.update(extra_props)
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=new_schema.jsonValue(),
-            schema_id=base.schema_id + 1,
-            partition_spec=list(base.partition_spec),
-            properties=props,
-            refs=dict(base.refs),
-            current_snapshot_id=base.current_snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+        """Metadata-only commit: same snapshots, new schema and/or
+        partition spec, schema_id+1. Any compaction that started under
+        the old schema_id aborts at commit time via the schema guard;
+        this commit itself refuses (CommitFailed) if another schema
+        change landed since this handle's schema was read. ``pinned``
+        columns must be neither virtualized in the live data files nor
+        keyed by live equality deletes."""
+        start_id = self.meta.schema_id
+
+        def build(base: md.TableMetadata) -> md.TableMetadata:
+            if base.schema_id != start_id:
+                raise CommitFailed(
+                    f"schema changed concurrently: {start_id} -> "
+                    f"{base.schema_id}; re-run against the current schema"
+                )
+            snap = base.current_snapshot()
+            if snap is not None:
+                virtual = {c for e in snap.files(md.DATA) for c in e.partition}
+                bad = [c for c in pinned if c in virtual]
+                if bad:
+                    raise ValueError(
+                        f"columns virtualized in live data files (compact "
+                        f"to the current spec first): {bad}"
+                    )
+                keyed = {
+                    c for e in snap.files(md.EQ_DELETE) for c in e.equality_ids
+                }
+                bad = [c for c in pinned if c in keyed]
+                if bad:
+                    raise ValueError(
+                        f"columns referenced by live equality-delete files "
+                        f"(compact first): {bad}"
+                    )
+            meta = base.next_version(schema_id=base.schema_id + 1)
+            if new_schema is not None:
+                meta.schema = new_schema.jsonValue()
+            if partition_spec is not None:
+                meta.partition_spec = list(partition_spec)
+            if dropped:
+                prev = meta.properties.get("dropped_columns", "")
+                meta.properties["dropped_columns"] = ",".join(
+                    [c for c in prev.split(",") if c] + list(dropped)
+                )
+            meta.properties.update(extra_props or {})
+            return meta
+
+        self._commit(build)
 
     def add_columns(self, fields: list[T.StructField]) -> None:
         """Append nullable columns to the schema. Files written before
@@ -800,9 +738,7 @@ class LakeTable:
                 )
             if not f.nullable:
                 raise ValueError(f"new column must be nullable: {f.name}")
-        self._evolve_schema(
-            T.StructType(list(cur.fields) + list(fields)), dropped=[]
-        )
+        self._evolve_schema(T.StructType(list(cur.fields) + list(fields)))
 
     def _rename_history(self) -> dict[str, list[str]]:
         """{current column name: [historical names, oldest first]}."""
@@ -861,24 +797,6 @@ class LakeTable:
             )
         if old in self.meta.partition_spec:
             raise ValueError(f"cannot rename partition column: {old}")
-        snap = self.meta.current_snapshot()
-        if snap is not None:
-            virtual = {
-                c for e in snap.files(md.DATA) for c in e.partition.keys()
-            }
-            if old in virtual:
-                raise ValueError(
-                    f"column virtualized in live data files (compact to the "
-                    f"current spec first): {old}"
-                )
-            referenced = {
-                c for e in snap.files(md.EQ_DELETE) for c in e.equality_ids
-            }
-            if old in referenced:
-                raise ValueError(
-                    f"column referenced by live equality-delete files "
-                    f"(compact first): {old}"
-                )
         hist[new] = hist.pop(old, []) + [old]
         new_fields = [
             T.StructField(new, f.dataType, f.nullable, f.metadata)
@@ -888,8 +806,8 @@ class LakeTable:
         ]
         self._evolve_schema(
             T.StructType(new_fields),
-            dropped=[],
             extra_props={"column_renames": _json.dumps(hist)},
+            pinned=[old],
         )
 
     def set_partition_spec(self, new_spec: list[str]) -> None:
@@ -907,22 +825,7 @@ class LakeTable:
         missing = [c for c in new_spec if c not in live]
         if missing:
             raise ValueError(f"partition columns not in schema: {missing}")
-        base = self.meta
-        meta = md.TableMetadata(
-            table_root=base.table_root,
-            schema=base.schema,
-            schema_id=base.schema_id + 1,
-            partition_spec=list(new_spec),
-            properties=dict(base.properties),
-            refs=dict(base.refs),
-            current_snapshot_id=base.current_snapshot_id,
-            last_sequence_number=base.last_sequence_number,
-            last_snapshot_id=base.last_snapshot_id,
-            version=base.version + 1,
-            snapshots=list(base.snapshots),
-        )
-        md.write_version(meta)
-        self.meta = meta
+        self._evolve_schema(partition_spec=new_spec)
 
     def drop_columns(self, names: list[str]) -> None:
         """Remove columns from the schema. Data files are untouched —
@@ -940,33 +843,15 @@ class LakeTable:
         in_part = [n for n in names if n in self.meta.partition_spec]
         if in_part:
             raise ValueError(f"cannot drop partition columns: {in_part}")
-        snap = self.meta.current_snapshot()
-        if snap is not None:
-            # After partition evolution, old files may still virtualize a
-            # column the current spec no longer lists — their scan group
-            # needs it in the schema to recover values.
-            virtual = {
-                c for e in snap.files(md.DATA) for c in e.partition.keys()
-            }
-            still_virtual = [n for n in names if n in virtual]
-            if still_virtual:
-                raise ValueError(
-                    f"columns virtualized in live data files (compact to the "
-                    f"current spec first): {still_virtual}"
-                )
-        if snap is not None:
-            referenced = {
-                c for e in snap.files(md.EQ_DELETE) for c in e.equality_ids
-            }
-            blocked = [n for n in names if n in referenced]
-            if blocked:
-                raise ValueError(
-                    f"columns referenced by live equality-delete files: {blocked}"
-                )
         remaining = [f for f in cur.fields if f.name not in set(names)]
         if not remaining:
             raise ValueError("cannot drop every column")
-        self._evolve_schema(T.StructType(remaining), dropped=list(names))
+        # After partition evolution, old files may still virtualize a
+        # column the current spec no longer lists — their scan group
+        # needs it in the schema to recover values.
+        self._evolve_schema(
+            T.StructType(remaining), dropped=list(names), pinned=list(names)
+        )
 
     # ------------------------------------------------------------------
     # row-level operations (MoR DML; the reference's EqualityDeltaWriter
@@ -1100,11 +985,6 @@ class LakeTable:
         at removed data files dangle harmlessly until
         ``rewrite_position_deletes`` drops them.
         """
-        from bergloom_spark.lake.commit import (
-            RetryConfig,
-            RewriteFilesCommitManager,
-        )
-
         add_entries = wr.write_data_files(
             df,
             self.meta.table_root,
@@ -1127,7 +1007,7 @@ class LakeTable:
             starting_sequence_number=self.meta.last_sequence_number + 1,
             # replacement rows must outrank every existing delete
             use_starting_sequence_number=False,
-            retry=RetryConfig(),
+            retry=TABLE_RETRY,
         )
         self.meta = manager.rewrite_files(
             add_entries,

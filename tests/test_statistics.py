@@ -124,6 +124,23 @@ class TestLakeStatistics:
         t2 = load_iceberg_table(spark, mjson)
         assert t2.ndv_stats() == ndv
 
+    def test_compute_on_file_scheme_root(self, spark, tmp_path):
+        """The Puffin file is written and read through the root's
+        FileIO, so a ``file://`` table root works like a bare path."""
+        from bergloom_spark.lake.statistics import compute_table_statistics
+
+        df = spark.range(300).select(
+            F.col("id"), (F.col("id") % 7).alias("low")
+        )
+        t = LakeTable.create(spark, f"file://{tmp_path}/t", df.schema)
+        t.append(df)
+        path = compute_table_statistics(t)
+        assert path.startswith("file://")
+        assert t.ndv_stats() == {"id": 300, "low": 7}
+        assert LakeTable.load(spark, t.meta.table_root).ndv_stats() == {
+            "id": 300, "low": 7,
+        }
+
     def test_stale_stats_surface_as_absent(self, spark, tmp_path):
         from bergloom_spark.lake.iceberg_export import (
             export_iceberg_metadata,
